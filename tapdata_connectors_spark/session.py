@@ -9,6 +9,17 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
   pandas UDF (input_hint: "no per-row Python").
 - UTC session TZ so parquet timestamps compare bit-exactly with the DuckDB
   oracle (which is UTC-naive).
+- Driver heap (`spark.driver.memory`) defaults to
+  min(16g, floor(0.75 x physical RAM / 1.40)) in MiB; SPARK_GRAFT_DRIVER_MEM
+  overrides it. 0.75 is the Spark "Hardware Provisioning" guide's ceiling
+  (give Spark at most 75% of a machine's memory); 1.40 is 1 +
+  `spark.driver.memoryOverheadFactor` for non-JVM jobs (0.40 in the Spark
+  configuration docs), and this engine runs Arrow pandas UDFs in Python
+  workers. In local mode the one JVM is driver and executor at once: with a
+  heap larger than RAM, G1 and the unified memory manager see no reason to
+  collect, spill or evict, so the process grows past physical RAM and the
+  kernel OOM-kills it; no Java OutOfMemoryError is raised. A 16 GiB host
+  gets 8777m; hosts with >= 29.9 GiB keep 16g.
 """
 
 from __future__ import annotations
@@ -16,6 +27,26 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem(phys_bytes: int) -> str:
+    """Default driver heap for a host with `phys_bytes` of physical RAM.
+
+    min(16g, floor(0.75 * phys_bytes / 1.40)) in MiB; see "Scale notes".
+    """
+    mib = phys_bytes * 75 // (140 * 1024 * 1024)
+    return "16g" if mib >= 16 * 1024 else f"{mib}m"
+
+
+def _driver_mem() -> str:
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError):  # no sysconf, e.g. Windows
+        return "16g"
+    return _default_driver_mem(phys)
 
 
 def build_session(
@@ -46,7 +77,7 @@ def build_session(
         # lake's manifest-bounds file skipping (lake/stats.py) on ts cols
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
